@@ -24,7 +24,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS",
+                          len(os.sched_getaffinity(0))))
 # large enough that per-stage fixed latencies (~10 small jobs in the
 # cross-document linking + CC chain, ~3-4 s total regardless of corpus
 # size) amortize into steady-state throughput; round 1 used 12000 and
@@ -41,6 +42,15 @@ BENCH_QUERIES = [
 ]
 
 
+def host_heap_mb(share: float = 0.5) -> int:
+    """``share`` of the host's MemTotal (/proc/meminfo), in MiB."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return max(1024, int(int(line.split()[1]) * share / 1024))
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
 def main() -> None:
     from tildener_spark import get_spark
     from tildener_spark.config import EngineConfig
@@ -52,8 +62,9 @@ def main() -> None:
 
     # docs cache for N_DOCS nested-token pages + the query working set
     # need real heap headroom: an 8g driver GC-thrashes at 48k docs
-    # (measured 52.9s vs ~11s for the same kg run)
-    os.environ.setdefault("SPARK_DRIVER_MEM", "24g")
+    # (measured 52.9s vs ~11s for the same kg run).  get_spark pins
+    # -Xms to this, so it must fit the host: a share of MemTotal
+    os.environ.setdefault("SPARK_DRIVER_MEM", f"{host_heap_mb()}m")
     spark = get_spark(app_name="tildener-bench",
                       master=f"local[{CPUS}]",
                       shuffle_partitions=max(CPUS, 8))

@@ -11,12 +11,15 @@ Two experiments, both deterministic:
    its own step and turns the test red with the letter's name on it.
 """
 
+import os
 import sys
+
+import pytest
 
 sys.path.insert(0, "/root/repo/scripts")
 
 from refinement_ablation import (  # noqa: E402
-    PREFIXES, ablation_rows, noise_ablation_rows)
+    GOLD_DIR, PREFIXES, ablation_rows, noise_ablation_rows)
 
 # (label, precision, recall, f1) — exact fractions of the planted
 # error mass, independent of n_docs (every doc carries the identical
@@ -40,6 +43,8 @@ def test_noise_model_staircase_pinned(spark):
     assert got == NOISE_STAIRCASE
 
 
+@pytest.mark.skipif(not os.path.isdir(GOLD_DIR),
+                    reason="reference TEST corpus absent")
 def test_gold_corpus_full_chain_pinned(spark):
     """Full-chain exact-span metrics over the 51 reference gold docs
     (odd-doc gazetteer): the number BENCH/REFINEMENT_ABLATION.md

@@ -74,14 +74,26 @@ class EngineConfig:
     # collides on everything; exact-surface hub merging covers them)
     cross_doc_min_len: int = 8
     cc_max_iterations: int = 20
-    # Connected components runs driver-side union-find when the edge
-    # set is below this (the broadcast-join size-adaptivity pattern);
-    # the iterated self-join path handles anything larger.  Sized for
-    # the Arrow-lean collect in components.py: 500k edges of two
-    # ~40-char ids ≈ 40 MB of string bytes + ~50 B/str Python object
-    # overhead ≈ 140 MB peak, comfortably inside a default 1 GB
-    # driver (ADVICE r02 flagged the old 1M-edge default as
-    # optimistic under Row-object overhead).
+    # Size limit of the cross-document graph stage's driver path
+    # (graph.cross_doc_components, the broadcast-join size-adaptivity
+    # pattern): while the surface vocabulary and hub edges together
+    # fit in this many rows, banding, Jaro-Winkler scoring and
+    # union-find run on the driver after one toArrow(); above it they
+    # run as Spark jobs.  connected_components applies the same limit
+    # to its edge set.  Measured with scripts/graph_stage_crossover.py
+    # on a 4-core, 15 GB host (local[4]; peak process-tree PSS above
+    # the warmed session, driver JVM + Python workers):
+    #   rows     driver path       Spark path
+    #   10k      1.6 s  +0.1 GB    4.4 s  +0.2 GB
+    #   100k     4.6 s  +0.5 GB   10.8 s  +0.5 GB
+    #   250k     9.1 s  +0.7 GB   24.0 s  +0.7 GB
+    #   500k    17.7 s  +1.2 GB   37.3 s  +1.0 GB
+    #   50k skewed (49-member buckets, 1.2M candidate pairs):
+    #           11.9 s  +0.1 GB   39.3 s  +1.4 GB
+    # No crossover below 500k on that host, so the limit is set by
+    # driver memory, which grows ~2.3 KB per row; the candidate pairs
+    # stream through in fixed-size blocks, so bucket skew does not
+    # add to it.  A cluster with many more cores may cross over lower.
     cc_driver_threshold: int = 500_000
     # Skew handling: salt fan-out for connected-components joins.
     salt_buckets: int = 16

@@ -29,6 +29,37 @@ from tildener_spark.config import EngineConfig
 from tildener_spark.materialize import materialize_once, release
 
 
+def union_find_components(pairs) -> list[tuple[str, str]]:
+    """Driver-side connected components over ``pairs`` (a, b):
+    sorted (node, component) rows with component = the smallest node
+    id in the component — the same partition and representatives as
+    the distributed loop of :func:`connected_components`, in
+    O(E α(E)) time."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[ra] = rb
+    comp_min: dict = {}
+    for node in parent:
+        root = find(node)
+        cur = comp_min.get(root)
+        if cur is None or node < cur:
+            comp_min[root] = node
+    return [(node, comp_min[find(node)]) for node in sorted(parent)]
+
+
 class CCNotConverged(RuntimeError):
     """Connected components hit cc_max_iterations with labels still
     changing — the returned partition would be partially propagated."""
@@ -62,54 +93,16 @@ def connected_components(edges: DataFrame, cfg: EngineConfig | None = None,
     n_edges = one_dir.count()
     out_schema = one_dir.select(
         F.col("a").alias("node"), F.col("b").alias("component")).schema
-    if n_edges == 0:
-        # fast path: no edges (e.g. a hub graph with no alias chains)
-        # — skip the iteration machinery entirely
-        out = one_dir.sparkSession.createDataFrame([], out_schema)
-        one_dir.unpersist()
-        return out
     if n_edges <= cfg.cc_driver_threshold:
         # size-adaptive driver path (the broadcast-join pattern): on a
         # sub-threshold edge set, the iterated-join machinery is pure
-        # fixed job latency — union-find on the collected edges gives
-        # the IDENTICAL min-label partition in O(E α(E)) driver time.
-        # The hub graph is bounded by the number of *linked surface
-        # pairs*, not corpus size, so this is the common case even at
-        # large corpus scale; the distributed loop below remains the
-        # path for genuinely huge graphs.
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:
-                parent[x], x = root, parent[x]
-            return root
-
-        # toArrow(), not collect(): PySpark Row objects cost hundreds
-        # of bytes each for two short strings; the Arrow table holds
-        # the raw string bytes, and to_pylist() yields plain str pairs
-        # — ~50 bytes/str of Python overhead instead of per-Row dicts
+        # fixed job latency.  toArrow(), not collect(): PySpark Row
+        # objects cost hundreds of bytes each for two short strings
         # (ADVICE r02: keeps the threshold's driver-memory bound
-        # honest).  toLocalIterator() stays out: one sequential job
-        # PER PARTITION (measured ~11 s for a 6-row table).
+        # honest); toLocalIterator() runs one job PER PARTITION.
         tbl = one_dir.toArrow()
-        for a, b in zip(tbl.column(0).to_pylist(),
-                        tbl.column(1).to_pylist()):
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[ra] = rb
-        del tbl
-        comp_min: dict = {}
-        for node in parent:
-            root = find(node)
-            cur = comp_min.get(root)
-            if cur is None or node < cur:
-                comp_min[root] = node
-        rows = [(node, comp_min[find(node)]) for node in sorted(parent)]
+        rows = union_find_components(zip(tbl.column(0).to_pylist(),
+                                         tbl.column(1).to_pylist()))
         out = one_dir.sparkSession.createDataFrame(rows, out_schema)
         one_dir.unpersist()
         return out

@@ -25,13 +25,18 @@ dependency-free (parquet + orc paths are tested).
 
 from __future__ import annotations
 
+from functools import reduce
+from itertools import chain
+
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from tildener_spark.config import EngineConfig
-from tildener_spark.diag import stage_mark as _stage_mark
-from tildener_spark.operators.components import connected_components
+from tildener_spark.operators.components import (
+    connected_components, union_find_components)
 from tildener_spark.operators.linking import (
-    alias_links, jaro_winkler, lsh_candidate_pairs,
+    MAX_BUCKET, alias_links, jaro_winkler, jaro_winkler_np,
+    lsh_candidate_pairs, minhash_band_keys,
 )
 
 SEP = "␟"  # unit-separator; never appears in surfaces
@@ -40,6 +45,7 @@ SEP = "␟"  # unit-separator; never appears in surfaces
 # (LV/LT/ET letters + common Latin-1 accents).
 _ACCENTS = "āčēģīķļņšūžõäöüàáâãåèéêëìíîïòóôùúûñçýăęłńśźż"
 _ACCENTS_FOLDED = "acegiklnsuzoaouaaaaaeeeeiiiiooouuuncyaelnszz"
+_FOLD = str.maketrans(_ACCENTS, _ACCENTS_FOLDED)
 
 
 def _mention_node(url, ne_type, surface):
@@ -111,6 +117,17 @@ def fused_canonical_tables(mention_hub: DataFrame,
     return mapping, components
 
 
+def _pair_prefilter(len_a, len_b, first_a, first_b):
+    """The cheap test a candidate pair (a, b) passes before
+    Jaro-Winkler: lengths within a fifth of len(a) and equal
+    accent-folded first characters.  Stated once for both paths of
+    the cross-document stage: the operands are Columns in
+    :func:`score_cross_pairs` and ints/strs in
+    :func:`_driver_cross_edges`."""
+    return (((len_a - len_b) * 5 <= len_a) & ((len_b - len_a) * 5 <= len_a)
+            & (first_a == first_b))
+
+
 def score_cross_pairs(cand: DataFrame,
                       cfg: EngineConfig | None = None) -> DataFrame:
     """JVM-side prefilters BEFORE the (Python) Jaro-Winkler pass over
@@ -127,19 +144,210 @@ def score_cross_pairs(cand: DataFrame,
     """
     cfg = cfg or EngineConfig()
     fold = lambda c: F.translate(  # noqa: E731
-        F.lower(c), _ACCENTS, _ACCENTS_FOLDED)
-    cand = cand.filter(
-        (F.abs(F.length("a") - F.length("b"))
-         * F.lit(5) <= F.length("a"))
-        & (fold(F.substring("a", 1, 1))
-           == fold(F.substring("b", 1, 1)))
-    )
+        F.lower(F.substring(c, 1, 1)), _ACCENTS, _ACCENTS_FOLDED)
+    cand = cand.filter(_pair_prefilter(
+        F.length("a"), F.length("b"), fold("a"), fold("b")))
     return (
         cand.withColumn(
             "score",
             jaro_winkler(F.lower("a"), F.lower("b")))
         .filter(F.col("score") >= cfg.cross_doc_min_score)
     )
+
+
+def surface_vocab(resolved: DataFrame,
+                  cfg: EngineConfig | None = None) -> DataFrame:
+    """Distinct (ne_type, surface) cross-document linking vocabulary
+    of a (…, ne_type, doc_canonical) table.  Surfaces shorter than
+    ``cross_doc_min_len`` stay out: exact-surface hub merging covers
+    them."""
+    cfg = cfg or EngineConfig()
+    return (resolved
+            .select("ne_type", F.col("doc_canonical").alias("surface"))
+            .filter(F.length("surface") >= cfg.cross_doc_min_len)
+            .distinct())
+
+
+def cross_doc_components(vocab: DataFrame, hub_edges: DataFrame,
+                         cfg: EngineConfig | None = None,
+                         counters: dict | None = None,
+                         new_vocab: DataFrame | None = None) -> DataFrame:
+    """The cross-document graph stage: (ne_type, surface) ``vocab`` and
+    hub-hub ``hub_edges`` (src, dst, duplicates allowed) -> hub_cc
+    (node, component).
+
+    Blocking → scoring → clustering: minhash-LSH band buckets over the
+    vocabulary (buckets above ``MAX_BUCKET`` members dropped), the
+    :func:`_pair_prefilter` and Jaro-Winkler bar of
+    :func:`score_cross_pairs`, then connected components over the
+    accepted pairs (as hub-hub edges) ∪ ``hub_edges``.  With
+    ``cfg.cross_doc_linking`` off only the components run.
+
+    ``new_vocab`` (incremental merges): only pairs touching one of
+    these surfaces are scored — pairs between two prior surfaces were
+    decided in the prior run — and ``counters["vocab_delta"]``
+    records its size.  ``counters["lsh_bucket_guard"]`` receives the
+    bucket-guard audit of :func:`~tildener_spark.operators.linking.
+    lsh_candidate_pairs` on both paths.
+
+    Size-adaptive like a broadcast join: while vocab, new_vocab and
+    hub edges together fit in ``cfg.cc_driver_threshold`` rows, one
+    ``toArrow()`` brings them to the driver and banding (the banding
+    UDF's own :func:`minhash_band_keys`), scoring and union-find run
+    there — the stage is vocabulary-sized, so on Spark it is mostly
+    fixed per-job latency.  Above the threshold the Spark path runs;
+    the inputs are cached first, so the size probe fills the cache
+    the Spark path reads instead of re-running their corpus-sized
+    lineage."""
+    cfg = cfg or EngineConfig()
+    counters = {} if counters is None else counters
+    limit = cfg.cc_driver_threshold
+    hub_edges = hub_edges.select("src", "dst").distinct()
+    # new_vocab before vocab, whose cached plan then reads it
+    inputs = [(0, hub_edges)] + [
+        (k, v) for k, v in ((2, new_vocab), (1, vocab))
+        if v is not None and cfg.cross_doc_linking]
+    for _, d in inputs:
+        d.persist()
+    try:
+        tbl = reduce(DataFrame.union, [
+            d.select(F.lit(k).alias("k"), *d.columns) for k, d in inputs
+        ]).limit(limit + 1).toArrow()
+        if tbl.num_rows > limit:
+            return _cross_doc_components_spark(vocab, hub_edges, cfg,
+                                               counters, new_vocab)
+        rows: dict[int, list] = {k: [] for k, _ in inputs}
+        for k, x, y in zip(*(c.to_pylist() for c in tbl.columns)):
+            rows[k].append((x, y))
+        del tbl
+        edges = rows[0]
+        if cfg.cross_doc_linking:
+            new = None if new_vocab is None else set(rows[2])
+            if new is not None:
+                counters["vocab_delta"] = {"rows_out": len(new)}
+            edges = chain(edges,
+                          _driver_cross_edges(rows[1], cfg, counters, new))
+        return hub_edges.sparkSession.createDataFrame(
+            union_find_components(edges), "node string, component string")
+    finally:
+        # the components are materialized on both paths
+        for _, d in inputs:
+            d.unpersist()
+
+
+# pairs per driver-side jaro_winkler_np call (the session's Arrow
+# batch size, session.py) and per vectorized block of bucket pairs
+_JW_BATCH = 2048
+_PAIR_BLOCK = 1 << 16
+
+
+def _driver_cross_edges(vocab: list, cfg: EngineConfig, counters: dict,
+                        new: set | None):
+    """Yields the accepted cross-document hub edges over (ne_type,
+    surface) rows: the blocking of :func:`lsh_candidate_pairs` and
+    the scoring of :func:`score_cross_pairs`, on the driver.
+
+    Bucket pairs are built as numpy index arrays, up to
+    ``_PAIR_BLOCK`` pairs at a time, and scored ``_JW_BATCH`` at a
+    time; a pair is scored only in the first band that buckets it
+    (the Spark path's distinct).  Memory stays vocabulary-sized
+    whatever the bucket skew."""
+    surfaces = [s for _, s in vocab]
+    n = len(vocab)
+    keys = minhash_band_keys(surfaces, cfg)
+    n_bands = keys.shape[1]
+    typ = np.unique([t for t, _ in vocab], return_inverse=True)[1].ravel()
+    row = np.repeat(np.arange(n), n_bands)
+    # (ne_type, band key) buckets: ids in sort order of one lexsort
+    flat_t, flat_k = typ[row], keys.ravel()
+    order = np.lexsort((flat_k, flat_t))
+    k_s, t_s = flat_k[order], flat_t[order]
+    starts_b = np.ones(len(order), dtype=bool)
+    starts_b[1:] = (k_s[1:] != k_s[:-1]) | (t_s[1:] != t_s[:-1])
+    bucket = np.empty(len(order), dtype=np.int64)
+    bucket[order] = np.cumsum(starts_b) - 1
+    sizes = np.bincount(bucket)
+    over = sizes > MAX_BUCKET
+    counters["lsh_bucket_guard"] = {
+        "rows_total": keys.size, "rows_dropped": int(sizes[over].sum()),
+        "buckets_dropped_approx": int(over.sum())}
+    # (row, band) -> its bucket, -1 where the guard dropped the bucket
+    kept = np.where(over[bucket], -1, bucket).reshape(n, n_bands)
+    band_of = np.empty(len(sizes), dtype=np.int64)
+    band_of[bucket] = np.tile(np.arange(n_bands), n)
+    members = row[order]
+    starts = np.cumsum(sizes) - sizes
+    rank = np.empty(n, dtype=np.int64)
+    rank[sorted(range(n), key=surfaces.__getitem__)] = np.arange(n)
+    length = np.fromiter(map(len, surfaces), np.int64, n)
+    firsts: dict = {}
+    first = np.array([firsts.setdefault(s[:1].lower().translate(_FOLD),
+                                        len(firsts)) for s in surfaces])
+    is_new = None if new is None else np.array([v in new for v in vocab])
+    lower = [s.lower() for s in surfaces]
+    node = [f"g:{t}{SEP}{s}" for t, s in vocab]
+    for size in np.unique(sizes[(sizes > 1) & ~over]).tolist():
+        bs = np.flatnonzero((sizes == size) & ~over)
+        i, k = np.triu_indices(size, 1)
+        step = max(1, _PAIR_BLOCK // len(i))
+        for lo in range(0, len(bs), step):
+            b = bs[lo: lo + step]
+            m = members[starts[b][:, None] + np.arange(size)]
+            ra, rb = m[:, i].ravel(), m[:, k].ravel()
+            # a < b, like the Spark path's self-join filter
+            ra, rb = (np.where(rank[ra] < rank[rb], ra, rb),
+                      np.where(rank[ra] < rank[rb], rb, ra))
+            earlier = (np.arange(n_bands)[None, :]
+                       < np.repeat(band_of[b], len(i))[:, None])
+            ok = ~((kept[ra] == kept[rb]) & (kept[ra] >= 0)
+                   & earlier).any(axis=1)
+            ok &= _pair_prefilter(length[ra], length[rb],
+                                  first[ra], first[rb])
+            if is_new is not None:
+                ok &= is_new[ra] | is_new[rb]
+            ra, rb = ra[ok].tolist(), rb[ok].tolist()
+            for j in range(0, len(ra), _JW_BATCH):
+                xa, xb = ra[j: j + _JW_BATCH], rb[j: j + _JW_BATCH]
+                scores = jaro_winkler_np([lower[x] for x in xa],
+                                         [lower[x] for x in xb])
+                yield from ((node[x], node[y])
+                            for x, y, sc in zip(xa, xb, scores)
+                            if sc >= cfg.cross_doc_min_score)
+
+
+def _cross_doc_components_spark(vocab, hub_edges, cfg, counters,
+                                new_vocab) -> DataFrame:
+    """:func:`cross_doc_components` as Spark jobs (above the
+    driver threshold)."""
+    handles: list = []
+    if cfg.cross_doc_linking:
+        # the per-band bucket cap + AQE skew join guard the self-join
+        # (SURVEY.md §4.3.2)
+        cand = lsh_candidate_pairs(vocab, cfg, handles=handles,
+                                   counters=counters)
+        if new_vocab is not None:
+            counters["vocab_delta"] = {"rows_out": new_vocab.count()}
+
+            def flag(c):
+                return F.broadcast(new_vocab.select(
+                    "ne_type", F.col("surface").alias(c),
+                    F.lit(True).alias("_n" + c)))
+            cand = (cand.join(flag("a"), ["ne_type", "a"], "left")
+                    .join(flag("b"), ["ne_type", "b"], "left")
+                    .filter(F.col("_na").isNotNull()
+                            | F.col("_nb").isNotNull())
+                    .drop("_na", "_nb"))
+        hub_edges = hub_edges.unionByName(
+            score_cross_pairs(cand, cfg).select(
+                _hub_node(F.col("ne_type"), F.col("a")).alias("src"),
+                _hub_node(F.col("ne_type"), F.col("b")).alias("dst")))
+    hub_cc = connected_components(hub_edges, cfg)
+    # CC materialized its labels, so the LSH stage's caches are
+    # consumed — release them (long-lived sessions would otherwise
+    # accumulate cached tables)
+    for h in handles:
+        h.unpersist()
+    return hub_cc
 
 
 def build_entity_graph(mentions: DataFrame,
@@ -227,46 +435,13 @@ def build_entity_graph(mentions: DataFrame,
                   ["url", "ne_type", "canonical"])
             .filter(F.col("hub_a") != F.col("hub_c"))
             .select(F.col("hub_a").alias("src"), F.col("hub_c").alias("dst"))
-            .distinct()
         )
-    else:
-        hub_pairs = hub_pairs.select("src", "dst").distinct()
 
-    if cfg.cross_doc_linking:
-        # north-star cross-document linking: minhash-LSH blocking over
-        # the global (type, doc-canonical) surface vocabulary +
-        # Jaro-Winkler scoring; accepted near-duplicate surfaces
-        # (typos, diacritic variants) become extra hub-hub edges so CC
-        # merges them into one canonical entity.  The vocabulary is
-        # the distinct doc-canonical set — orders of magnitude smaller
-        # than the mention table — and the per-band bucket cap +
-        # AQE skew join guard the self-join (SURVEY.md §4.3.2).
-        vocab = (
-            resolved.select(
-                "ne_type", F.col("doc_canonical").alias("surface"))
-            .filter(F.length("surface") >= cfg.cross_doc_min_len)
-            .distinct()
-        )
-        lsh_handles: list = []
-        _stage_mark("graph_plan_build")
-        cand = lsh_candidate_pairs(vocab, cfg, handles=lsh_handles,
-                                   counters=counters)
-        _stage_mark("lsh_banding_materialize")
-        scored = score_cross_pairs(cand, cfg)
-        cross_edges = scored.select(
-            _hub_node(F.col("ne_type"), F.col("a")).alias("src"),
-            _hub_node(F.col("ne_type"), F.col("b")).alias("dst"),
-        )
-        hub_pairs = hub_pairs.unionByName(cross_edges)
-    else:
-        lsh_handles = []
-    hub_cc = connected_components(hub_pairs, cfg)
-    _stage_mark("connected_components")
-    # CC materialized its (localCheckpointed) labels, so the LSH
-    # stage's internal cache is consumed — release it (long-lived
-    # sessions would otherwise accumulate cached tables)
-    for h in lsh_handles:
-        h.unpersist()
+    # north-star cross-document linking over the global (type,
+    # doc-canonical) surface vocabulary — orders of magnitude smaller
+    # than the mention table — merged with the alias-chain hub edges
+    hub_cc = cross_doc_components(surface_vocab(resolved, cfg), hub_pairs,
+                                  cfg, counters)
 
     if surfaces is not None:
         # ---- fused fast path: broadcast-correction canonicalization.

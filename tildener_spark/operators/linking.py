@@ -179,20 +179,28 @@ def jaro_winkler(a: pd.Series, b: pd.Series) -> pd.Series:
 # ------------------------------------------------- minhash-LSH blocking
 
 _FNV = np.uint64(1099511628211)
+# band buckets above this many members are dropped (the LSH skew guard)
+MAX_BUCKET = 50
+# texts per flat-array batch of minhash_band_keys (~20 MB of hashes
+# at 40 shingles per text)
+_BAND_BATCH = 2048
 
 
-def make_minhash_bands_udf(cfg: EngineConfig | None = None):
-    """Arrow-batched numpy minhash banding: text -> array<bigint>.
+def minhash_band_keys(texts, cfg: EngineConfig | None = None) -> np.ndarray:
+    """Minhash LSH band keys of ``texts``: an (n, bands) int64 array.
 
-    Per row: lowercase, k-codepoint sliding windows (numpy stride
-    view), polynomial base hash per shingle (uint64 natural-overflow
-    mod 2^64), np.unique for shingle distinctness, then all
-    bands*rows affine hashes in one broadcasted multiply and per-band
-    minima folded into one bigint key (band index baked in so keys
-    never collide across bands).  Deterministic in cfg.seed; all the
-    per-element work is C-side — the interpreted transform/array_min
-    expression tree this replaces measured ~0.4 ms/row (the reason
-    cross-document linking was opt-out in round 1)."""
+    Per text: lowercase, k-codepoint shingles (a text shorter than k
+    is one shingle), polynomial base hash per shingle (uint64
+    natural-overflow mod 2^64), all bands*rows affine hashes in one
+    broadcasted multiply and per-band minima folded into one bigint
+    key (band index baked in so keys never collide across bands).
+    Batches of texts run as flat numpy arrays — each text padded with
+    k zero codepoints, so a short text's window is the text itself —
+    with per-text minima by ``np.minimum.reduceat``; no per-text
+    numpy call.  Deterministic in cfg.seed.  The banding UDF and the
+    driver-side graph stage (graph.cross_doc_components) both call
+    this, so their band keys are identical by construction."""
+    from numpy.lib.stride_tricks import sliding_window_view
     cfg = cfg or EngineConfig()
     k = cfg.shingle_size
     n_bands, n_rows = cfg.minhash_bands, cfg.minhash_rows
@@ -204,37 +212,44 @@ def make_minhash_bands_udf(cfg: EngineConfig | None = None):
         [pow(int(_FNV), k - 1 - i, 1 << 64) for i in range(k)],
         dtype=np.uint64)
     band_tag = np.arange(n_bands, dtype=np.uint64)
+    strs = [(t or "").lower() for t in texts]
+    out = np.zeros((len(strs), n_bands), dtype=np.int64)
+    pad = "\0" * k
+    with np.errstate(over="ignore"):  # uint64 wrap IS the hash
+        for lo in range(0, len(strs), _BAND_BATCH):
+            batch = strs[lo: lo + _BAND_BATCH]
+            lens = np.fromiter(map(len, batch), np.int64, len(batch))
+            cp = np.frombuffer(pad.join(batch + [""]).encode("utf-32-le"),
+                               dtype=np.uint32).astype(np.uint64)
+            win = sliding_window_view(cp, k)
+            # shingle start positions: 0..L-k of each text, or just 0
+            n_sh = np.maximum(lens - k + 1, 1)
+            first = np.cumsum(n_sh) - n_sh
+            seg = np.cumsum(lens + k) - (lens + k)
+            at = np.repeat(seg - first, n_sh) + np.arange(n_sh.sum())
+            base = (win[at] * powers[None, :]).sum(axis=1, dtype=np.uint64)
+            mins = np.minimum.reduceat(
+                base[:, None] * mult[None, :] + add[None, :], first, axis=0
+            ).reshape(len(batch), n_bands, n_rows)
+            key = np.zeros((len(batch), n_bands), dtype=np.uint64)
+            for r in range(n_rows):
+                key = key * _FNV + mins[:, :, r]
+            out[lo: lo + len(batch)] = (key * _FNV + band_tag).astype(np.int64)
+    return out
+
+
+def make_minhash_bands_udf(cfg: EngineConfig | None = None):
+    """Arrow-batched numpy minhash banding: text -> array<bigint>, the
+    :func:`minhash_band_keys` of each row.  The interpreted
+    transform/array_min expression tree this replaces measured
+    ~0.4 ms/row (the reason cross-document linking was opt-out in
+    round 1)."""
+    cfg = cfg or EngineConfig()
 
     @F.pandas_udf("array<bigint>")
     def minhash_bands(texts: pd.Series) -> pd.Series:
-        from numpy.lib.stride_tricks import sliding_window_view
-        out = []
-        err = np.errstate(over="ignore")  # uint64 wrap IS the hash
-        with err:
-            for t in texts:
-                s = (t or "").lower()
-                cp = np.frombuffer(
-                    s.encode("utf-32-le"), dtype=np.uint32)
-                if len(cp) >= k:
-                    win = sliding_window_view(cp, k).astype(np.uint64)
-                    base = (win * powers[None, :]).sum(
-                        axis=1, dtype=np.uint64)
-                else:
-                    # short string: one shingle = the whole string
-                    # (matches substr(1, k) on a shorter input)
-                    pw = powers[: len(cp)] if len(cp) else powers[:0]
-                    base = np.array(
-                        [(cp.astype(np.uint64) * pw).sum(dtype=np.uint64)]
-                        if len(cp) else [np.uint64(0)], dtype=np.uint64)
-                base = np.unique(base)
-                mins = (base[:, None] * mult[None, :] + add[None, :]) \
-                    .min(axis=0).reshape(n_bands, n_rows)
-                key = np.zeros(n_bands, dtype=np.uint64)
-                for r in range(n_rows):
-                    key = key * _FNV + mins[:, r]
-                key = key * _FNV + band_tag
-                out.append(key.astype(np.int64))
-        return pd.Series(out, index=texts.index)
+        return pd.Series(list(minhash_band_keys(texts, cfg)),
+                         index=texts.index)
 
     # asNondeterministic pins the evaluation site: Catalyst otherwise
     # clones deterministic UDF calls when pushing filters (e.g. the
@@ -255,7 +270,7 @@ def with_minhash_bands(df: DataFrame, text_col: str,
 
 def lsh_candidate_pairs(entities: DataFrame, cfg: EngineConfig | None = None,
                         id_col: str = "surface", type_col: str = "ne_type",
-                        max_bucket: int = 50,
+                        max_bucket: int = MAX_BUCKET,
                         handles: list | None = None,
                         counters: dict | None = None) -> DataFrame:
     """Global near-duplicate surface pairs via banded minhash join.
@@ -271,10 +286,12 @@ def lsh_candidate_pairs(entities: DataFrame, cfg: EngineConfig | None = None,
     ``counters``: optional dict that receives
     ``counters["lsh_bucket_guard"] = {"rows_total", "rows_dropped",
     "buckets_dropped_approx"}`` via an ``observe()`` riding the
-    stage's own materializing count — the dropped-bucket audit trail
-    for adversarially skewed corpora (a universal shingle produces
-    one giant bucket; the guard drops it and the counter proves it
-    fired rather than silently truncating)."""
+    stage's own count.  All three are exact counts; the last keeps
+    the name it had when it was an estimate, so readers of the
+    counter need no change.  The audit trail for adversarially
+    skewed corpora (a universal shingle produces one giant bucket;
+    the guard drops it and the counter proves it fired rather than
+    silently truncating)."""
     cfg = cfg or EngineConfig()
     # OPTIMIZER BARRIER between the banding UDF and the explode below:
     # explode makes Catalyst infer `size(bands) > 0 AND isnotnull(bands)`
@@ -303,9 +320,10 @@ def lsh_candidate_pairs(entities: DataFrame, cfg: EngineConfig | None = None,
             obs,
             F.count(F.lit(1)).alias("rows_total"),
             F.sum(over.cast("long")).alias("rows_dropped"),
-            F.approx_count_distinct(
-                F.when(over, F.concat_ws("\u241f", type_col, "band")))
-            .alias("buckets_dropped_approx"),
+            # each dropped bucket's rows sum to 1: an exact count
+            # (observe() allows no distinct aggregate)
+            F.round(F.sum(F.when(over, 1.0 / F.col("bucket_n"))))
+            .cast("long").alias("buckets_dropped_approx"),
         )
     small = (
         staged

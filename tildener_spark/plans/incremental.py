@@ -10,12 +10,14 @@ needs, so the incremental run's cost profile is:
 
 * corpus-sized work ONLY on the delta: one fused Arrow pass over the
   new pages (the >95% cost center of a full run);
-* vocabulary-sized work on the union: minhash banding re-runs over
-  the combined surface vocabulary (|V|, orders of magnitude below
-  corpus size), but candidate scoring — the expensive Python step —
-  runs ONLY for pairs touching a genuinely new surface: pairs between
-  two prior surfaces were already decided in the prior run and are
-  encoded in its component assignments;
+* vocabulary-sized work on the union, in the same graph stage as a
+  full build (graph.cross_doc_components, on the driver below
+  ``cc_driver_threshold`` rows): minhash banding re-runs over the
+  combined surface vocabulary (|V|, orders of magnitude below corpus
+  size), but candidate scoring runs ONLY for pairs touching a
+  genuinely new surface: pairs between two prior surfaces were
+  already decided in the prior run and are encoded in its component
+  assignments;
 * connected components over (prior hub->component assignments ∪
   delta alias edges ∪ new cross-document links) — the prior
   partition enters as pre-collapsed star edges, so CC input is
@@ -48,11 +50,9 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from tildener_spark.config import EngineConfig
 from tildener_spark.operators.document import (
     explode_docs, make_process_document_udf)
-from tildener_spark.operators.components import connected_components
 from tildener_spark.operators.graph import (
     SEP, _hub_node, canonicalize_triples_fused, corrections_from_cc,
-    fused_canonical_tables, score_cross_pairs)
-from tildener_spark.operators.linking import lsh_candidate_pairs
+    cross_doc_components, fused_canonical_tables, surface_vocab)
 
 __all__ = ["read_stage", "rebuild_graph_stage",
            "run_pipeline_incremental"]
@@ -71,9 +71,8 @@ def read_stage(spark: SparkSession, checkpoint_dir: str,
 def _resolved(docs: DataFrame) -> DataFrame:
     """(url, ne_type, surface, doc_canonical) from a docs stage
     table (fused per-document output struct)."""
-    return (docs.select("url", F.explode("doc.surfaces").alias("x"))
-            .select("url", "x.*")
-            .select("url", "ne_type", "surface", "doc_canonical"))
+    return explode_docs(docs, "surfaces").select(
+        "url", "ne_type", "surface", "doc_canonical")
 
 
 def rebuild_graph_stage(spark: SparkSession, docs: DataFrame,
@@ -94,35 +93,21 @@ def rebuild_graph_stage(spark: SparkSession, docs: DataFrame,
     invariant ``tests/test_kgstream.py`` pins.
 
     Cost shape: everything downstream of the per-document pass (the
-    >95% cost center, NOT re-run) — |V|-sized LSH banding + pair
-    scoring, CC over hub edges, one corpus-sized mapping/canonical
-    rewrite.  Exactly what a production deployment schedules nightly
-    or weekly while per-batch merges stay incremental.
+    >95% cost center, NOT re-run) — the |V|-sized graph stage of a
+    full build (graph.cross_doc_components) and one corpus-sized
+    mapping/canonical rewrite.  Exactly what a production deployment
+    schedules nightly or weekly while per-batch merges stay
+    incremental.
 
     Returns {"mapping", "components", "entities",
-    "canonical_triples"}.
+    "canonical_triples", "counters"}.
     """
     cfg = cfg or EngineConfig()
     counters: dict[str, dict] = {}
     resolved = _resolved(docs)
-    hub_pairs = (docs.select(F.explode("doc.hub_pairs").alias("x"))
-                 .select("x.*").select("src", "dst").distinct())
-    vocab = (resolved
-             .select("ne_type",
-                     F.col("doc_canonical").alias("surface"))
-             .filter(F.length("surface") >= cfg.cross_doc_min_len)
-             .distinct())
-    handles: list = []
-    cand = lsh_candidate_pairs(vocab, cfg, handles=handles,
-                               counters=counters)
-    cross = score_cross_pairs(cand, cfg).select(
-        _hub_node(F.col("ne_type"), F.col("a")).alias("src"),
-        _hub_node(F.col("ne_type"), F.col("b")).alias("dst"))
-    hub_cc = connected_components(
-        hub_pairs.unionByName(cross), cfg)
-    for h in handles:
-        h.unpersist()
-    corr = corrections_from_cc(hub_cc)
+    hub_pairs = explode_docs(docs, "hub_pairs").select("src", "dst")
+    corr = corrections_from_cc(cross_doc_components(
+        surface_vocab(resolved, cfg), hub_pairs, cfg, counters))
     mention_hub = resolved.select(
         "url", "ne_type", "surface",
         _hub_node(F.col("ne_type"), F.col("doc_canonical"))
@@ -135,7 +120,8 @@ def rebuild_graph_stage(spark: SparkSession, docs: DataFrame,
              F.countDistinct("surface").alias("n_surfaces"))
     )
     return {"mapping": mapping, "components": components,
-            "entities": entities, "canonical_triples": canon}
+            "entities": entities, "canonical_triples": canon,
+            "counters": counters}
 
 
 def run_pipeline_incremental(
@@ -213,7 +199,6 @@ def run_pipeline_incremental(
             .select(F.col("node").alias("src"),
                     F.col("component").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
-            .distinct()
         )
     else:
         prior_hub_edges = (
@@ -224,15 +209,11 @@ def run_pipeline_incremental(
                 .alias("src"),
                 F.col("component").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
-            .distinct()
         )
 
     # ---- delta corpus: the only corpus-sized work ----------------
-    initialisms = {
-        r["surface"] for r in gazetteer
-        .filter(F.col("ne_type") == "ORG_INIT").collect()}
-    gaz_rows = [(r["ne_type"], r["surface"])
-                for r in gazetteer.collect()]
+    gaz_rows = [(r["ne_type"], r["surface"]) for r in gazetteer.collect()]
+    initialisms = {s for t, s in gaz_rows if t == "ORG_INIT"}
     doc_udf = make_process_document_udf(gaz_rows, cfg, initialisms)
     docs_delta = pages_delta.select(
         "url", "lang", doc_udf(F.col("text")).alias("doc")).persist()
@@ -240,69 +221,31 @@ def run_pipeline_incremental(
 
     triples_dc_delta = explode_docs(docs_delta, "triples")
     resolved_delta = _resolved(docs_delta)
-    hub_pairs_delta = (
-        docs_delta.select(F.explode("doc.hub_pairs").alias("x"))
-        .select("x.*").select("src", "dst").distinct())
+    hub_pairs_delta = explode_docs(docs_delta, "hub_pairs").select(
+        "src", "dst")
 
     # ---- vocabulary delta + new-pair-only linking ----------------
-    def vocab(resolved):
-        return (resolved
-                .select("ne_type",
-                        F.col("doc_canonical").alias("surface"))
-                .filter(F.length("surface") >= cfg.cross_doc_min_len)
-                .distinct())
-
     if hub_components is not None:
         # the hub node-id set IS the prior doc-canonical vocabulary
         # ("g:<type>␟<canonical>") — no docs scan needed
-        v_prior = (
-            hub_components
-            .select(F.split(F.substring("node", 3, 1 << 20), SEP)
-                    .alias("parts"))
-            .select(F.col("parts")[0].alias("ne_type"),
-                    F.col("parts")[1].alias("surface"))
-            .filter(F.length("surface") >= cfg.cross_doc_min_len)
-            .distinct()
-            .persist()
-        )
+        parts = F.split(F.substring("node", 3, 1 << 20), SEP)
+        v_prior = surface_vocab(hub_components.select(
+            parts[0].alias("ne_type"), parts[1].alias("doc_canonical")), cfg)
     else:
-        v_prior = vocab(resolved_prior).persist()
-    v_new = (vocab(resolved_delta)
-             .join(v_prior, ["ne_type", "surface"], "left_anti")
-             .persist())
-    n_new = v_new.count()
-    counters["vocab_delta"] = {"rows_out": n_new}
-    v_all = v_prior.unionByName(v_new)
-
-    lsh_handles: list = []
-    cand = lsh_candidate_pairs(v_all, cfg, handles=lsh_handles,
-                               counters=counters)
-    # keep only pairs that touch a NEW surface: prior-internal pairs
-    # were decided in the prior run and live in prior_hub_edges
-    flag_a = v_new.select(
-        "ne_type", F.col("surface").alias("a"),
-        F.lit(True).alias("_na"))
-    flag_b = v_new.select(
-        "ne_type", F.col("surface").alias("b"),
-        F.lit(True).alias("_nb"))
-    cand_new = (
-        cand.join(F.broadcast(flag_a), ["ne_type", "a"], "left")
-        .join(F.broadcast(flag_b), ["ne_type", "b"], "left")
-        .filter(F.col("_na").isNotNull() | F.col("_nb").isNotNull())
-        .drop("_na", "_nb")
-    )
-    cross_edges_new = score_cross_pairs(cand_new, cfg).select(
-        _hub_node(F.col("ne_type"), F.col("a")).alias("src"),
-        _hub_node(F.col("ne_type"), F.col("b")).alias("dst"),
-    )
+        # a prior-docs scan that both the vocabulary and its delta
+        # read: cache it (vocabulary-sized)
+        v_prior = surface_vocab(resolved_prior, cfg).persist()
+    v_new = surface_vocab(resolved_delta, cfg).join(
+        v_prior, ["ne_type", "surface"], "left_anti")
 
     # ---- merged components + broadcast-correction rewrite --------
-    edges = (prior_hub_edges
-             .unionByName(hub_pairs_delta)
-             .unionByName(cross_edges_new))
-    hub_cc = connected_components(edges, cfg)
-    for h in lsh_handles:
-        h.unpersist()
+    # only pairs touching a NEW surface are scored: prior-internal
+    # pairs were decided in the prior run and live in prior_hub_edges
+    hub_cc = cross_doc_components(
+        v_prior.unionByName(v_new),
+        prior_hub_edges.unionByName(hub_pairs_delta),
+        cfg, counters, new_vocab=v_new)
+    v_prior.unpersist()  # hub_cc is materialized
     corr = corrections_from_cc(hub_cc)
 
     resolved_all = resolved_prior.unionByName(resolved_delta)
@@ -320,8 +263,6 @@ def run_pipeline_incremental(
         .agg(F.countDistinct("url").alias("n_docs"),
              F.countDistinct("surface").alias("n_surfaces"))
     )
-    v_prior.unpersist()
-    v_new.unpersist()
     return {
         "canonical_triples": canon,
         "mapping": mapping,

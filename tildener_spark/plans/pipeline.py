@@ -9,8 +9,13 @@ with the north-rule KG stages:
                                                                ▼
     explode ─ assemble_spans (1 shuffle: groupBy url,span_grp) ─ mentions
     mentions ─ extract_triples (window + verb range join)      ─ triples
-    mentions ─ alias_links ─ connected_components              ─ entities
+    mentions ─ alias_links ─ graph.cross_doc_components        ─ entities
     triples × mapping ─ canonicalize ─ aggregate               ─ edges
+
+The graph stage (graph.cross_doc_components: LSH banding → Jaro-Winkler
+→ union-find over the surface vocabulary and alias-chain hub edges) is
+vocabulary-sized, not corpus-sized: below ``cc_driver_threshold`` rows
+it runs on the driver after one ``toArrow()``, above it as Spark jobs.
 
 Stage boundaries are exactly the shuffles; with ``checkpoint_dir``
 set, each named stage materializes to parquet with per-partition
@@ -37,7 +42,6 @@ from tildener_spark.operators.graph import (
 from tildener_spark.operators.spans import assemble_spans
 from tildener_spark.operators.tokenize import explode_tokens
 from tildener_spark.operators.triples import extract_triples
-from tildener_spark.diag import stage_mark as _stage_mark
 from tildener_spark.plans.lineage import checkpoint_stage
 
 
@@ -99,7 +103,6 @@ def run_pipeline(
     cfg = cfg or EngineConfig()
     ckpt = cfg.checkpoint_dir
     counters: dict[str, dict] = {}
-    _stage_mark(None)  # reset the diagnostic stage clock
 
     if reextract_text:
         pages = pages.withColumn("text", extract_text("html"))
@@ -121,15 +124,8 @@ def run_pipeline(
         pages = checkpoint_stage(spark, pages, ckpt, "pages_clean",
                                  counters=counters)
 
-    initialisms = {
-        r["surface"]
-        for r in gazetteer.filter(F.col("ne_type") == "ORG_INIT").collect()
-    }
-
-    gaz_rows = (
-        [(r["ne_type"], r["surface"]) for r in gazetteer.collect()]
-        if hasattr(gazetteer, "collect") else list(gazetteer)
-    )
+    gaz_rows = [(r["ne_type"], r["surface"]) for r in gazetteer.collect()]
+    initialisms = {s for t, s in gaz_rows if t == "ORG_INIT"}
 
     links = surfaces = hub_pairs = None
     if fused:
@@ -175,24 +171,8 @@ def run_pipeline(
         mentions = explode_docs(docs if ckpt else docs_full, "mentions")
         triples_dc = explode_docs(docs, "triples")
         links = explode_docs(docs, "links")
-        # surfaces + hub_pairs feed the whole graph stage (vocab
-        # distinct, hub edges, mention->hub mapping) — carve them out
-        # of the big docs cache ONCE into a tiny cached projection so
-        # the graph stage's several consumers deserialize small rows
-        # instead of re-scanning full doc structs (tokens/mentions/
-        # triples dominate the row bytes)
-        graph_in = docs.select(
-            "url",
-            F.col("doc.surfaces").alias("surfaces"),
-            F.col("doc.hub_pairs").alias("hub_pairs"))
-        if not ckpt:
-            graph_in = graph_in.persist()
-        surfaces = (
-            graph_in.select("url", F.explode("surfaces").alias("x"))
-            .select("url", "x.*"))
-        hub_pairs = (
-            graph_in.select(F.explode("hub_pairs").alias("x"))
-            .select("x.*"))
+        surfaces = explode_docs(docs, "surfaces")
+        hub_pairs = explode_docs(docs, "hub_pairs")
         if ckpt:
             mentions = checkpoint_stage(spark, mentions, ckpt, "mentions",
                                         counters=counters)
@@ -232,19 +212,15 @@ def run_pipeline(
 
     if fused and not ckpt:
         # materialize the docs cache with ONE scan before the graph
-        # stage: the first downstream action otherwise scans the cold
-        # cache concurrently from several branches (hub_pairs, the CC
-        # edge union, both sides of the LSH self-join) and the
-        # per-document UDF runs 2-3x in full — measured as a ~9x
-        # wall-time blowup at low core counts in round 1, and a 2x
-        # blowup at 48k docs even without cross-doc linking (stages
-        # within one job run concurrently when independent)
+        # stage: its first job otherwise scans the cold cache from
+        # concurrent branches (vocabulary, hub edges) and can run the
+        # per-document UDF once per branch — measured as a ~9x
+        # wall-time blowup at low core counts in round 1.  It also
+        # keeps the docs pass out of the graph stage's wall time.
         docs.count()
-        _stage_mark("docs_materialize")
     graph = build_entity_graph(mentions, cfg, initialisms, links=links,
                                surfaces=surfaces, hub_pairs=hub_pairs,
                                counters=counters)
-    _stage_mark("graph_construct_eager_cc")
     links, entities, mapping = (
         graph["links"], graph["entities"], graph["mapping"])
     if ckpt:
@@ -284,7 +260,7 @@ def run_pipeline(
         # result DataFrames are consumed (unpersisting earlier would
         # force recompute from the docs cache — harmless but wasteful)
         if fused:
-            extra["caches"] = [docs, graph_in]
+            extra["caches"] = [docs]
         else:
             extra["caches"] = [tagged, mentions, mapping,
                                graph["links"]]

@@ -72,10 +72,9 @@ class KGState:
             committed.append(path)
             manifest = os.path.join(path, "_SUPERSEDES")
             if os.path.exists(manifest):
-                superseded.update(
-                    line.strip()
-                    for line in open(manifest).read().splitlines()
-                    if line.strip())
+                with open(manifest) as f:
+                    superseded.update(
+                        line.strip() for line in f if line.strip())
         return [p for p in committed
                 if os.path.basename(p) not in superseded]
 
@@ -101,8 +100,8 @@ class KGState:
         for e in self.epochs():
             manifest = os.path.join(e, "_BATCH_IDS")
             if os.path.exists(manifest):
-                ids.update(int(line) for line in
-                           open(manifest).read().split() if line)
+                with open(manifest) as f:
+                    ids.update(int(tok) for tok in f.read().split())
         return ids
 
     @staticmethod
