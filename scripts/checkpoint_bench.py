@@ -111,7 +111,9 @@ def main() -> None:
     pages_path = os.environ.get(
         "SPARK_GRAFT_PAGES_PATH", os.path.join(work, "pages"))
     env = dict(os.environ)
-    env.setdefault("SPARK_DRIVER_MEM", "32g")
+    sys.path.insert(0, REPO)
+    from bench import host_heap_mb
+    env.setdefault("SPARK_DRIVER_MEM", f"{host_heap_mb()}m")
     report: dict = {"n_docs": N_DOCS, "slices": SLICES, "levels": {}}
 
     # --- 1. in-memory vs checkpointed wall per level ---------------

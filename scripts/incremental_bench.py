@@ -18,7 +18,8 @@ kg_incremental oracle row).
 
 Usage: python scripts/incremental_bench.py
   SPARK_GRAFT_BENCH_DOCS (default 200000), SPARK_GRAFT_CPUS (32),
-  SPARK_GRAFT_TRIALS (2, best-of), SPARK_DRIVER_MEM (32g advised).
+  SPARK_GRAFT_TRIALS (2, best-of), SPARK_DRIVER_MEM (keep it inside
+  the host's memory: get_spark pins -Xms to it).
 """
 
 from __future__ import annotations

@@ -97,7 +97,9 @@ def main() -> None:
     pages_path = os.path.join(work, "pages")
     results = {}
     env = dict(os.environ)
-    env.setdefault("SPARK_DRIVER_MEM", "32g")
+    sys.path.insert(0, REPO)
+    from bench import host_heap_mb
+    env.setdefault("SPARK_DRIVER_MEM", f"{host_heap_mb()}m")
     # pre-generate input at full parallelism (untimed)
     subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--generate",

@@ -99,14 +99,15 @@ def _digest(df):
 
 @pytest.fixture
 def stage_spy(monkeypatch):
-    """Records each cross_doc_components call's hub_cc rows and
-    counters, and how often the Spark path's CC ran."""
-    seen = {"hub_cc": [], "counters": [], "spark_cc": 0}
+    """Records each cross_doc_components call's hub_cc rows, analyzed
+    plan and counters, and how often the Spark path's CC ran."""
+    seen = {"hub_cc": [], "plans": [], "counters": [], "spark_cc": 0}
     orig, orig_cc = graph.cross_doc_components, graph.connected_components
 
     def spy(vocab, hub_edges, cfg=None, counters=None, new_vocab=None):
         out = orig(vocab, hub_edges, cfg, counters, new_vocab)
         seen["hub_cc"].append(sorted(map(tuple, out.collect())))
+        seen["plans"].append(_analyzed(out))
         seen["counters"].append(dict(counters or {}))
         return out
 
@@ -118,6 +119,16 @@ def stage_spy(monkeypatch):
     monkeypatch.setattr(incremental, "cross_doc_components", spy)
     monkeypatch.setattr(graph, "connected_components", cc)
     return seen
+
+
+def _analyzed(df):
+    return df._jdf.queryExecution().analyzed().toString()
+
+
+def _assert_local_relation(plan):
+    """Driver-built labels are an Arrow-backed LocalRelation: no
+    pickled Python RDD that every later job re-runs."""
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan
 
 
 def _on_both_paths(spy, run):
@@ -148,6 +159,7 @@ def test_driver_path_matches_spark_path(spark, tmp_path, stage_spy):
 
     spark_run, driver_run = _on_both_paths(stage_spy, batch)
     assert spark_run == driver_run
+    _assert_local_relation(stage_spy["plans"][-1])
     (_, variants), _, counters = driver_run
     # the diacritic and one-character variants merged into one entity
     assert len(variants) == 3 and len({c for _, c in variants}) == 1
@@ -222,3 +234,26 @@ def test_skewed_vocabulary_on_both_paths(spark, monkeypatch):
     # every group's pairs, each scored once (not once per shared band)
     assert 2048 < sum(batches) <= 6 * 49 * 48 // 2
     assert max(batches) <= graph._JW_BATCH
+
+
+def test_driver_labels_are_typed_local_relations(spark):
+    """Zero union-find rows still give a typed (node, component)
+    LocalRelation: cross-document linking off and no alias chains,
+    and a vocabulary with no candidate pair.  connected_components'
+    driver branch types its labels from the edge columns."""
+    vocab = spark.createDataFrame([("PERS", "Janis Berzins")],
+                                  "ne_type string, surface string")
+    no_edges = spark.createDataFrame([], "src string, dst string")
+    for linking in (False, True):
+        cfg = EngineConfig(cc_driver_threshold=10**6,
+                           cross_doc_linking=linking)
+        out = graph.cross_doc_components(vocab, no_edges, cfg)
+        _assert_local_relation(_analyzed(out))
+        assert out.schema.simpleString() \
+            == "struct<node:string,component:string>"
+        assert out.count() == 0
+    ids = spark.createDataFrame([(2, 1), (3, 2)], "src long, dst long")
+    out = graph.connected_components(ids, DRIVER_PATH)
+    _assert_local_relation(_analyzed(out))
+    assert out.schema.simpleString() == "struct<node:bigint,component:bigint>"
+    assert sorted(map(tuple, out.collect())) == [(1, 1), (2, 1), (3, 1)]

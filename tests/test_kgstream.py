@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from tildener_spark.config import EngineConfig
 from tildener_spark.datagen import corpus_df, gazetteer_df, split_gold
+from tildener_spark.plans.incremental import read_stage
 from tildener_spark.plans.pipeline import run_pipeline
 from tildener_spark.streaming.kgstream import (
     KGState, kg_maintenance_query)
@@ -101,6 +102,21 @@ def test_compaction_preserves_state_and_continues(spark, tmp_path):
     state.merge_batch(pages.filter((num >= 20) & (num < 30)), gaz)
     state.merge_batch(pages.filter((num >= 30) & (num < 35)), gaz)
     assert len(state.epochs()) == 3
+
+    # the merges wrote or read every table of the three epochs, so
+    # read() infers no parquet schema: its only jobs collect the url
+    # sets of the two later epochs
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    tracker = spark.sparkContext.statusTracker()
+    bus.waitUntilEmpty()
+    jobs = set(tracker.getJobIdsForGroup(None))
+    state.read()
+    bus.waitUntilEmpty()
+    assert len(set(tracker.getJobIdsForGroup(None)) - jobs) == 2
+    for path, schema in state._schemas.items():
+        epoch, table = os.path.split(path)
+        assert read_stage(spark, epoch, table, schema).schema \
+            == read_stage(spark, epoch, table).schema
 
     before = _rows(state.canonical_triples(), CANON_COLS)
     state.compact()

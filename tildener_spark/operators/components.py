@@ -23,7 +23,10 @@ from __future__ import annotations
 
 import warnings
 
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StringType, StructField, StructType
 
 from tildener_spark.config import EngineConfig
 from tildener_spark.materialize import materialize_once, release
@@ -58,6 +61,26 @@ def union_find_components(pairs) -> list[tuple[str, str]]:
         if cur is None or node < cur:
             comp_min[root] = node
     return [(node, comp_min[find(node)]) for node in sorted(parent)]
+
+
+_LABELS = StructType([StructField("node", StringType()),
+                     StructField("component", StringType())])
+
+
+def union_find_frame(spark: SparkSession, pairs,
+                     schema: StructType = _LABELS) -> DataFrame:
+    """:func:`union_find_components` as a (node, component) DataFrame
+    over an Arrow table: a ``LocalRelation`` that every job scans in
+    the JVM.  A list of tuples would be a pickled Python RDD, re-run
+    through Python workers by each job that reads the labels.  The
+    columns are typed from ``schema``, so zero rows still give the
+    labels schema."""
+    rows = union_find_components(pairs)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [(), ()]
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)],
+        schema=arrow), schema)
 
 
 class CCNotConverged(RuntimeError):
@@ -101,9 +124,10 @@ def connected_components(edges: DataFrame, cfg: EngineConfig | None = None,
         # (ADVICE r02: keeps the threshold's driver-memory bound
         # honest); toLocalIterator() runs one job PER PARTITION.
         tbl = one_dir.toArrow()
-        rows = union_find_components(zip(tbl.column(0).to_pylist(),
-                                         tbl.column(1).to_pylist()))
-        out = one_dir.sparkSession.createDataFrame(rows, out_schema)
+        out = union_find_frame(
+            one_dir.sparkSession,
+            zip(tbl.column(0).to_pylist(), tbl.column(1).to_pylist()),
+            out_schema)
         one_dir.unpersist()
         return out
     # duplicate edges are harmless under min-aggregation; skipping the

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from tildener_spark.config import EngineConfig
 from tildener_spark.operators.components import (
-    connected_components, union_find_components)
+    connected_components, union_find_frame)
 from tildener_spark.operators.linking import (
     MAX_BUCKET, alias_links, jaro_winkler, jaro_winkler_np,
     lsh_candidate_pairs, minhash_band_keys,
@@ -80,9 +80,16 @@ def fused_canonical_tables(mention_hub: DataFrame,
                                                      DataFrame]:
     """Broadcast-correction canonicalization (the fused fast path):
     (mention_hub = (url, ne_type, surface, hub), corr) ->
-    (mapping, components).  The correction table is broadcast (if a
-    pathological corpus made it large, AQE would still execute the
-    same join hash-partitioned by dropping the hint)."""
+    (mapping, hub_components).  The correction table is broadcast (if
+    a pathological corpus made it large, AQE would still execute the
+    same join hash-partitioned by dropping the hint).
+
+    ``hub_components`` is the (node, component) partition of the hub
+    nodes: the vocabulary-sized table a checkpointed run or a state
+    epoch stores for the next incremental merge.  It is built from
+    the distinct hubs alone; deriving it from a mention-level
+    partition would scan and explode every mention row only to drop
+    it."""
     mapping = (
         mention_hub
         .join(F.broadcast(corr), ["hub"], "left")
@@ -96,25 +103,18 @@ def fused_canonical_tables(mention_hub: DataFrame,
             "component",
             _hub_node(F.col("ne_type"), F.col("canonical")))
     )
-    components = (
-        mapping.select(
-            _mention_node(F.col("url"), F.col("ne_type"),
-                          F.col("surface")).alias("node"),
-            "component")
-        .union(
-            mention_hub.select(F.col("hub").alias("node")).distinct()
-            .join(F.broadcast(corr), F.col("node") == F.col("hub"),
-                  "left")
-            .select(
-                "node",
-                F.coalesce(
-                    _hub_node(
-                        F.split(F.substring("node", 3, 1 << 20),
-                                SEP)[0],
-                        F.col("corr_canonical")),
-                    F.col("node")).alias("component")))
+    hub_components = (
+        mention_hub.select(F.col("hub").alias("node")).distinct()
+        .join(F.broadcast(corr), F.col("node") == F.col("hub"), "left")
+        .select(
+            "node",
+            F.coalesce(
+                _hub_node(
+                    F.split(F.substring("node", 3, 1 << 20), SEP)[0],
+                    F.col("corr_canonical")),
+                F.col("node")).alias("component"))
     )
-    return mapping, components
+    return mapping, hub_components
 
 
 def _pair_prefilter(len_a, len_b, first_a, first_b):
@@ -227,8 +227,7 @@ def cross_doc_components(vocab: DataFrame, hub_edges: DataFrame,
                 counters["vocab_delta"] = {"rows_out": len(new)}
             edges = chain(edges,
                           _driver_cross_edges(rows[1], cfg, counters, new))
-        return hub_edges.sparkSession.createDataFrame(
-            union_find_components(edges), "node string, component string")
+        return union_find_frame(hub_edges.sparkSession, edges)
     finally:
         # the components are materialized on both paths
         for _, d in inputs:
@@ -357,7 +356,8 @@ def build_entity_graph(mentions: DataFrame,
                        surfaces: DataFrame | None = None,
                        hub_pairs: DataFrame | None = None,
                        counters: dict | None = None) -> dict:
-    """mentions -> {links, edges, components, entities, mapping}.
+    """mentions -> {links, graph_edges, hub_components, entities,
+    mapping, corrections}.
 
     ``links`` / ``surfaces`` / ``hub_pairs`` may be precomputed by the
     fused per-document pass (operators/document.py): ``surfaces``
@@ -417,7 +417,7 @@ def build_entity_graph(mentions: DataFrame,
         _hub_node(F.col("ne_type"), F.col("doc_canonical")).alias("hub"),
     )
     if surfaces is None:
-        # reused by hub_pairs (x2), components, mapping; the fused
+        # reused by hub_pairs (x2), hub_component, mapping; the fused
         # variant is a narrow projection of the cached docs table —
         # caching it again would only duplicate memory
         mention_hub = mention_hub.persist()
@@ -454,7 +454,8 @@ def build_entity_graph(mentions: DataFrame,
         # pathological corpus made it large, AQE would still execute
         # the same join hash-partitioned by dropping the hint).
         corr = corrections_from_cc(hub_cc)
-        mapping, components = fused_canonical_tables(mention_hub, corr)
+        mapping, hub_components = fused_canonical_tables(mention_hub,
+                                                         corr)
     else:
         # hub -> component (hubs outside any alias chain are their own)
         hub_component = (
@@ -462,16 +463,8 @@ def build_entity_graph(mentions: DataFrame,
             .join(hub_cc.withColumnRenamed("node", "hub"), "hub", "left")
             .withColumn("component", F.coalesce("component", "hub"))
         )
-        components = (
-            mention_hub
-            .join(hub_component, "hub")
-            .select(
-                _mention_node(F.col("url"), F.col("ne_type"),
-                              F.col("surface")).alias("node"),
-                "component")
-            .union(hub_component.select(F.col("hub").alias("node"),
-                                        "component"))
-        )
+        hub_components = hub_component.select(
+            F.col("hub").alias("node"), "component")
 
         # canonical entity per component = smallest hub node id
         reps = (
@@ -503,7 +496,7 @@ def build_entity_graph(mentions: DataFrame,
     return {
         "links": links,
         "graph_edges": graph_edges,
-        "components": components,
+        "hub_components": hub_components,
         "entities": entities,
         "mapping": mapping,
         "corrections": corr if surfaces is not None else None,

@@ -45,7 +45,10 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from tildener_spark.config import EngineConfig
 from tildener_spark.operators.document import (
@@ -55,17 +58,30 @@ from tildener_spark.operators.graph import (
     cross_doc_components, fused_canonical_tables, surface_vocab)
 
 __all__ = ["read_stage", "rebuild_graph_stage",
-           "run_pipeline_incremental"]
+           "run_pipeline_incremental", "url_set"]
 
 
-def read_stage(spark: SparkSession, checkpoint_dir: str,
-               stage: str) -> DataFrame:
+def read_stage(spark: SparkSession, checkpoint_dir: str, stage: str,
+               schema: StructType | None = None) -> DataFrame:
     """Read a committed stage table from a prior run's checkpoint
-    dir, transparently handling the per-slice layout."""
+    dir, transparently handling the per-slice layout.  A known
+    ``schema`` skips parquet schema inference, which is a job of its
+    own."""
     path = os.path.join(checkpoint_dir, stage)
     if os.path.isdir(os.path.join(path, "slice_0")):
-        return spark.read.parquet(os.path.join(path, "slice_*"))
-    return spark.read.parquet(path)
+        path = os.path.join(path, "slice_*")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def url_set(df: DataFrame) -> DataFrame:
+    """The distinct urls of ``df`` collected in one job into an
+    Arrow-backed ``LocalRelation``: the queries that broadcast the
+    set never scan ``df`` again.  Driver memory is what the broadcast
+    holds anyway."""
+    urls = pc.unique(df.select("url").toArrow().column(0))
+    return df.sparkSession.createDataFrame(
+        pa.table({"url": urls.cast(pa.string())}), "url string")
 
 
 def _resolved(docs: DataFrame) -> DataFrame:
@@ -99,7 +115,7 @@ def rebuild_graph_stage(spark: SparkSession, docs: DataFrame,
     schedules nightly or weekly while per-batch merges stay
     incremental.
 
-    Returns {"mapping", "components", "entities",
+    Returns {"mapping", "hub_components", "entities",
     "canonical_triples", "counters"}.
     """
     cfg = cfg or EngineConfig()
@@ -112,14 +128,14 @@ def rebuild_graph_stage(spark: SparkSession, docs: DataFrame,
         "url", "ne_type", "surface",
         _hub_node(F.col("ne_type"), F.col("doc_canonical"))
         .alias("hub"))
-    mapping, components = fused_canonical_tables(mention_hub, corr)
+    mapping, hub_components = fused_canonical_tables(mention_hub, corr)
     canon = canonicalize_triples_fused(triples_dc, corr)
     entities = (
         mapping.groupBy("component", "ne_type", "canonical")
         .agg(F.countDistinct("url").alias("n_docs"),
              F.countDistinct("surface").alias("n_surfaces"))
     )
-    return {"mapping": mapping, "components": components,
+    return {"mapping": mapping, "hub_components": hub_components,
             "entities": entities, "canonical_triples": canon,
             "counters": counters}
 
@@ -139,7 +155,7 @@ def run_pipeline_incremental(
     DataFrames directly (the streaming epoch-state path,
     streaming/kgstream.py).
 
-    Returns {"canonical_triples", "mapping", "components",
+    Returns {"canonical_triples", "mapping", "hub_components",
     "entities", "triples_dc", "docs_delta", "triples_dc_delta",
     "counters"} for the MERGED corpus — the same tables a full-batch
     ``run_pipeline`` produces, plus the delta-only tables a caller
@@ -150,36 +166,50 @@ def run_pipeline_incremental(
     counters: dict[str, dict] = {}
 
     # ---- prior state (stage tables; no recompute) ----------------
-    hub_components = None
+    hub_prior = None
     if isinstance(prior, str):
         docs_prior = read_stage(spark, prior, "docs")
         triples_dc_prior = read_stage(spark, prior, "triples_dc")
         mapping_prior = read_stage(spark, prior, "mapping")
         if os.path.isdir(os.path.join(prior, "hub_components")):
-            hub_components = read_stage(spark, prior,
-                                        "hub_components")
+            hub_prior = read_stage(spark, prior, "hub_components")
     else:
         docs_prior = prior["docs"]
         triples_dc_prior = prior["triples_dc"]
         mapping_prior = prior["mapping"]
-        hub_components = prior.get("hub_components")
+        hub_prior = prior.get("hub_components")
+
+    # ---- delta corpus: the only corpus-sized work ----------------
+    gaz_rows = [(r["ne_type"], r["surface"]) for r in gazetteer.collect()]
+    initialisms = {s for t, s in gaz_rows if t == "ORG_INIT"}
+    doc_udf = make_process_document_udf(gaz_rows, cfg, initialisms)
+    docs_delta = pages_delta.select(
+        "url", "lang", doc_udf(F.col("text")).alias("doc")).persist()
+    # one materializing pass (see run_pipeline), which also collects
+    # the delta's url set below
+    delta_urls = url_set(docs_delta)
+
+    triples_dc_delta = explode_docs(docs_delta, "triples")
+    resolved_delta = _resolved(docs_delta)
+    hub_pairs_delta = explode_docs(docs_delta, "hub_pairs").select(
+        "src", "dst")
 
     # ---- url supersedence (re-crawl semantics) -------------------
     # A delta url already present in the prior state is a RE-CRAWL:
     # the new version REPLACES the old at the fact level — prior
     # docs/triples rows for that url drop, so stale triples vanish
-    # and per-url evidence never double-counts.  The broadcast
-    # anti-joins ride the same jobs that already scan the prior
-    # tables (resolved_all / triples_dc_all), so this costs no
-    # extra corpus-sized pass and no counter is recorded (counting
-    # superseded rows WOULD cost one).  Entity-merge decisions in
-    # the prior component partition stay STICKY — un-merging a
-    # cluster whose only evidence was a superseded page version
-    # needs decremental connected components, which no incremental
-    # path does exactly; merges are re-derived from scratch at the
-    # next full rebuild/compaction (the standard production-KG
-    # trade-off, pinned in tests/test_incremental.py).
-    delta_urls = pages_delta.select("url").distinct()
+    # and per-url evidence never double-counts.  The delta's url set
+    # is collected once, above; the broadcast anti-joins ride the
+    # jobs that already scan the prior tables (resolved_all /
+    # triples_dc_all), so supersedence costs no extra corpus-sized
+    # pass and no counter is recorded (counting superseded rows
+    # WOULD cost one).  Entity-merge decisions in the prior
+    # component partition stay STICKY — un-merging a cluster whose
+    # only evidence was a superseded page version needs decremental
+    # connected components, which no incremental path does exactly;
+    # merges are re-derived from scratch at the next full
+    # rebuild/compaction (the standard production-KG trade-off,
+    # pinned in tests/test_incremental.py).
     docs_prior = docs_prior.join(
         F.broadcast(delta_urls), "url", "left_anti")
     triples_dc_prior = triples_dc_prior.join(
@@ -193,9 +223,9 @@ def run_pipeline_incremental(
     # runs since it was added) gives this directly; older state falls
     # back to rejoining the mention-level tables — correct but
     # corpus-sized (measured ~4x slower end-to-end at 200k docs).
-    if hub_components is not None:
+    if hub_prior is not None:
         prior_hub_edges = (
-            hub_components
+            hub_prior
             .select(F.col("node").alias("src"),
                     F.col("component").alias("dst"))
             .filter(F.col("src") != F.col("dst"))
@@ -211,25 +241,12 @@ def run_pipeline_incremental(
             .filter(F.col("src") != F.col("dst"))
         )
 
-    # ---- delta corpus: the only corpus-sized work ----------------
-    gaz_rows = [(r["ne_type"], r["surface"]) for r in gazetteer.collect()]
-    initialisms = {s for t, s in gaz_rows if t == "ORG_INIT"}
-    doc_udf = make_process_document_udf(gaz_rows, cfg, initialisms)
-    docs_delta = pages_delta.select(
-        "url", "lang", doc_udf(F.col("text")).alias("doc")).persist()
-    docs_delta.count()  # one materializing pass (see run_pipeline)
-
-    triples_dc_delta = explode_docs(docs_delta, "triples")
-    resolved_delta = _resolved(docs_delta)
-    hub_pairs_delta = explode_docs(docs_delta, "hub_pairs").select(
-        "src", "dst")
-
     # ---- vocabulary delta + new-pair-only linking ----------------
-    if hub_components is not None:
+    if hub_prior is not None:
         # the hub node-id set IS the prior doc-canonical vocabulary
         # ("g:<type>␟<canonical>") — no docs scan needed
         parts = F.split(F.substring("node", 3, 1 << 20), SEP)
-        v_prior = surface_vocab(hub_components.select(
+        v_prior = surface_vocab(hub_prior.select(
             parts[0].alias("ne_type"), parts[1].alias("doc_canonical")), cfg)
     else:
         # a prior-docs scan that both the vocabulary and its delta
@@ -253,7 +270,7 @@ def run_pipeline_incremental(
         "url", "ne_type", "surface",
         _hub_node(F.col("ne_type"), F.col("doc_canonical"))
         .alias("hub"))
-    mapping, components = fused_canonical_tables(mention_hub, corr)
+    mapping, hub_components = fused_canonical_tables(mention_hub, corr)
 
     triples_dc_all = triples_dc_prior.unionByName(triples_dc_delta)
     canon = canonicalize_triples_fused(triples_dc_all, corr)
@@ -266,7 +283,7 @@ def run_pipeline_incremental(
     return {
         "canonical_triples": canon,
         "mapping": mapping,
-        "components": components,
+        "hub_components": hub_components,
         "entities": entities,
         "triples_dc": triples_dc_all,
         "docs_delta": docs_delta,

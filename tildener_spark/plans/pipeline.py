@@ -234,11 +234,8 @@ def run_pipeline(
         # the incremental merge plan (plans/incremental.py) seeds CC
         # and the prior vocabulary from this table, so a batch merge
         # never has to rejoin the mention-level docs/mapping tables
-        checkpoint_stage(
-            spark,
-            graph["components"].filter(F.col("node").startswith("g:"))
-            .select("node", "component"),
-            ckpt, "hub_components", counters=counters)
+        checkpoint_stage(spark, graph["hub_components"], ckpt,
+                         "hub_components", counters=counters)
     elif not fused:
         mapping = mapping.persist()  # joined twice (subj + obj sides)
 

@@ -18,18 +18,25 @@ State layout (``state_dir``)::
                           (run_pipeline(checkpoint_dir=...))
     epoch_00001/          each later batch: docs + triples_dc for the
       docs/               batch's pages (append-only facts), mapping/
-      triples_dc/         canonical_triples for the MERGED corpus
-      mapping/            (current view), _SUCCESS marker written
-      canonical_triples/  LAST so a crashed commit is invisible
+      triples_dc/         hub_components/canonical_triples for the
+      mapping/            MERGED corpus (current view), _SUCCESS
+      hub_components/     marker written LAST so a crashed commit is
+      canonical_triples/  invisible
       _SUCCESS
 
 Readers take docs/triples_dc as the union of ALL committed epochs and
-mapping/canonical_triples from the NEWEST — so the current canonical
-view is one directory read, while per-batch facts are never
-rewritten.  A crash mid-commit leaves no ``_SUCCESS``; the streaming
-checkpoint (offsets) replays the batch and the half-written epoch is
-overwritten — the same at-least-once + idempotent-commit contract as
-the batch pipeline's stage checkpoints.
+mapping/hub_components/canonical_triples from the NEWEST — so the
+current canonical view is one directory read, while per-batch facts
+are never rewritten.  A crash mid-commit leaves no ``_SUCCESS``; the
+streaming checkpoint (offsets) replays the batch and the half-written
+epoch is overwritten — the same at-least-once + idempotent-commit
+contract as the batch pipeline's stage checkpoints.
+
+Committed epochs are immutable, so a :class:`KGState` keeps the
+schema of every table it wrote or read and reads it again without
+parquet schema inference; a merge collects each later epoch's url
+set once, into a ``LocalRelation`` that all of the merge's queries
+broadcast.
 
 At 10^12-document scale the merged-view tables (mapping,
 canonical_triples) would be maintained as partition-merge writes
@@ -42,10 +49,11 @@ import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from tildener_spark.config import EngineConfig
 from tildener_spark.plans.incremental import (
-    read_stage, run_pipeline_incremental)
+    read_stage, run_pipeline_incremental, url_set)
 from tildener_spark.plans.pipeline import run_pipeline
 
 __all__ = ["KGState", "kg_maintenance_query"]
@@ -61,6 +69,21 @@ class KGState:
         self.spark = spark
         self.dir = state_dir
         os.makedirs(state_dir, exist_ok=True)
+        # table path -> schema, for every table this object wrote or
+        # read: committed epochs are immutable, so a later read skips
+        # parquet schema inference (one job per table otherwise)
+        self._schemas: dict[str, StructType] = {}
+
+    def _read(self, epoch: str, table: str) -> DataFrame:
+        path = os.path.join(epoch, table)
+        df = read_stage(self.spark, epoch, table, self._schemas.get(path))
+        self._schemas[path] = df.schema
+        return df
+
+    def _write(self, df: DataFrame, epoch: str, table: str) -> None:
+        path = os.path.join(epoch, table)
+        df.write.mode("overwrite").parquet(path)
+        self._schemas[path] = df.schema
 
     def epochs(self) -> list[str]:
         committed, superseded = [], set()
@@ -116,28 +139,30 @@ class KGState:
         page's stale docs/triples rows would re-enter every future
         merge), current view from the newest epoch.  Epoch count is
         bounded by compaction, so the chain of broadcast anti-joins
-        stays shallow."""
+        stays shallow.
+
+        Jobs: one per epoch after the first, collecting that epoch's
+        url set (:func:`~tildener_spark.plans.incremental.url_set`)
+        so that no query of the merge re-scans it; no parquet schema
+        inference for a table this object already wrote or read."""
         eps = self.epochs()
         if not eps:
             raise ValueError(f"no committed epochs in {self.dir}")
         docs = tdc = None
         for e in eps:                       # oldest -> newest
-            d = read_stage(self.spark, e, "docs")
-            t = read_stage(self.spark, e, "triples_dc")
+            d = self._read(e, "docs")
+            t = self._read(e, "triples_dc")
             if docs is None:
                 docs, tdc = d, t
             else:
-                urls = d.select("url").distinct()
-                docs = docs.join(F.broadcast(urls), "url",
-                                 "left_anti").unionByName(d)
-                tdc = tdc.join(F.broadcast(urls), "url",
-                               "left_anti").unionByName(t)
+                urls = F.broadcast(url_set(d))
+                docs = docs.join(urls, "url", "left_anti").unionByName(d)
+                tdc = tdc.join(urls, "url", "left_anti").unionByName(t)
         prior = {"docs": docs, "triples_dc": tdc,
-                 "mapping": read_stage(self.spark, eps[-1],
-                                       "mapping")}
+                 "mapping": self._read(eps[-1], "mapping")}
         if os.path.isdir(os.path.join(eps[-1], "hub_components")):
-            prior["hub_components"] = read_stage(
-                self.spark, eps[-1], "hub_components")
+            prior["hub_components"] = self._read(eps[-1],
+                                                 "hub_components")
         return prior
 
     def canonical_triples(self, epoch: int | None = None) -> DataFrame:
@@ -148,12 +173,11 @@ class KGState:
         compaction point)."""
         eps = self.epochs()
         if epoch is None:
-            return read_stage(self.spark, eps[-1],
-                              "canonical_triples")
+            return self._read(eps[-1], "canonical_triples")
         for e in eps:
             n = int(_EPOCH_RE.match(os.path.basename(e)).group(1))
             if n == epoch:
-                return read_stage(self.spark, e, "canonical_triples")
+                return self._read(e, "canonical_triples")
         raise ValueError(
             f"epoch {epoch} not committed in {self.dir} "
             f"(have {[os.path.basename(e) for e in eps]})")
@@ -193,18 +217,10 @@ class KGState:
         res = run_pipeline_incremental(self.spark, self.read(),
                                        pages, gazetteer, cfg)
         os.makedirs(path, exist_ok=True)
-        res["docs_delta"].write.mode("overwrite").parquet(
-            os.path.join(path, "docs"))
-        res["triples_dc_delta"].write.mode("overwrite").parquet(
-            os.path.join(path, "triples_dc"))
-        res["mapping"].write.mode("overwrite").parquet(
-            os.path.join(path, "mapping"))
-        res["components"].filter(
-            F.col("node").startswith("g:")).select(
-            "node", "component").write.mode("overwrite").parquet(
-            os.path.join(path, "hub_components"))
-        res["canonical_triples"].write.mode("overwrite").parquet(
-            os.path.join(path, "canonical_triples"))
+        self._write(res["docs_delta"], path, "docs")
+        self._write(res["triples_dc_delta"], path, "triples_dc")
+        for view in ("mapping", "hub_components", "canonical_triples"):
+            self._write(res[view], path, view)
         for c in res["caches"]:
             c.unpersist()
         if batch_id is not None:
@@ -242,36 +258,22 @@ class KGState:
         newest = eps[-1]
         path = self._next_path()
         os.makedirs(path, exist_ok=True)
-        prior["docs"].write.mode("overwrite").parquet(
-            os.path.join(path, "docs"))
-        prior["triples_dc"].write.mode("overwrite").parquet(
-            os.path.join(path, "triples_dc"))
+        self._write(prior["docs"], path, "docs")
+        self._write(prior["triples_dc"], path, "triples_dc")
         if rebuild:
             from tildener_spark.plans.incremental import (
                 rebuild_graph_stage)
-            docs_c = self.spark.read.parquet(
-                os.path.join(path, "docs"))
-            tdc_c = self.spark.read.parquet(
-                os.path.join(path, "triples_dc"))
-            res = rebuild_graph_stage(self.spark, docs_c, tdc_c)
-            res["mapping"].write.mode("overwrite").parquet(
-                os.path.join(path, "mapping"))
-            res["components"].filter(
-                F.col("node").startswith("g:")).select(
-                "node", "component").write.mode(
-                "overwrite").parquet(
-                os.path.join(path, "hub_components"))
-            res["canonical_triples"].write.mode(
-                "overwrite").parquet(
-                os.path.join(path, "canonical_triples"))
+            res = rebuild_graph_stage(self.spark,
+                                      self._read(path, "docs"),
+                                      self._read(path, "triples_dc"))
+            for view in ("mapping", "hub_components",
+                         "canonical_triples"):
+                self._write(res[view], path, view)
         else:
             for view in ("mapping", "hub_components",
                          "canonical_triples"):
-                src = os.path.join(newest, view)
-                if os.path.isdir(src):
-                    read_stage(self.spark, newest, view) \
-                        .write.mode("overwrite").parquet(
-                        os.path.join(path, view))
+                if os.path.isdir(os.path.join(newest, view)):
+                    self._write(self._read(newest, view), path, view)
         if batch_ids:
             self._write_batch_ids(path, batch_ids)
         with open(os.path.join(path, "_SUPERSEDES"), "w") as f:
