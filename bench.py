@@ -187,8 +187,8 @@ def main() -> None:
         max_trials=3)
 
     # KG maintenance + embedding-training tripwires at N_DOCS/4
-    # (regression detection, not absolute throughput — the absolute
-    # numbers live in scripts/incremental_bench.py at 200k docs)
+    # (regression detection, not absolute throughput — perfbench's
+    # stream_open_vocab workload measures the merge)
     from tildener_spark.operators.kgtrain import train_transe
     from tildener_spark.plans.incremental import (
         read_stage, run_pipeline_incremental)

@@ -160,6 +160,14 @@ def test_batch_id_replay_is_skipped(spark, tmp_path):
 
     state = KGState(spark, str(tmp_path / "state"))
     state.merge_batch(b0, gaz, batch_id=0)
+    # the first batch is a merge into empty state: the same slim
+    # five-table layout as every later epoch, no checkpoint lineage
+    e0 = state.epochs()[0]
+    assert sorted(os.listdir(e0)) == sorted(
+        ["docs", "triples_dc", "mapping", "hub_components",
+         "canonical_triples", "_BATCH_IDS", "_SUCCESS"])
+    doc_fields = state.read()["docs"].schema["doc"].dataType.names
+    assert "tokens" not in doc_fields and "mentions" not in doc_fields
     state.merge_batch(b1, gaz, batch_id=1)
     assert len(state.epochs()) == 2
     assert state.committed_batch_ids() == {0, 1}
@@ -291,9 +299,55 @@ def test_epoch_time_travel(spark, tmp_path):
     # epoch 0's view is still readable and equals what it was then
     assert _rows(state.canonical_triples(epoch=0), CANON_COLS) \
         == at_e0
+    # ... which is the full-batch result over batch 0: a merge into
+    # empty state is bit-identical to run_pipeline
+    full0 = run_pipeline(spark, pages.filter(num < 20), gaz,
+                         EngineConfig())
+    assert at_e0 == _rows(full0.canonical_triples, CANON_COLS)
+    mp_cols = ["url", "ne_type", "surface", "canonical"]
+    got_map0 = read_stage(spark, state.epochs()[0], "mapping")
+    assert _rows(got_map0, mp_cols) == _rows(full0.mapping, mp_cols)
     # current view covers the full corpus
     full = run_pipeline(spark, pages, gaz, EngineConfig())
     assert _rows(state.canonical_triples(), CANON_COLS) \
         == _rows(full.canonical_triples, CANON_COLS)
     with _pytest.raises(ValueError, match="not committed"):
         state.canonical_triples(epoch=9)
+
+
+def test_stream_applies_crawl_prefilters_to_every_batch(spark,
+                                                        tmp_path):
+    """url_dedup and repetition_filter act on each batch's pages, a
+    later merge included: the stream equals a pre-filtered full-batch
+    run over the union of its batches."""
+    corpus = corpus_df(spark, 20).cache()
+    pages, *_ = split_gold(corpus)
+    pages = pages.select("url", "warc_ts", "text", "lang").cache()
+    gaz = gazetteer_df(spark)
+    num = F.regexp_extract("url", r"doc/([0-9]+)$", 1).cast("int")
+
+    # later batch: a boilerplate page (one page's text four times
+    # over, so the repetition rules flag it) and a later-fetch url
+    # spelling variant of a page of the same batch
+    repeated = pages.filter(num == 12).select(
+        F.lit("https://spam.example.com/x").alias("url"), "warc_ts",
+        F.concat_ws("\n", *[F.col("text")] * 4).alias("text"), "lang")
+    assert run_pipeline(spark, repeated, gaz, EngineConfig()) \
+        .canonical_triples.count() > 0
+    variant = pages.filter(num == 15).select(
+        F.concat(F.lit("HTTP://WWW."),
+                 F.regexp_replace("url", r"^https://", ""),
+                 F.lit("/?utm_source=1")).alias("url"),
+        (F.col("warc_ts") + F.expr("interval 1 hour")).alias("warc_ts"),
+        "text", "lang")
+    b0 = pages.filter(num < 10)
+    b1 = pages.filter(num >= 10).unionByName(repeated) \
+        .unionByName(variant)
+
+    cfg = EngineConfig(url_dedup=True, repetition_filter=True)
+    state = KGState(spark, str(tmp_path / "state"))
+    state.merge_batch(b0, gaz, cfg)
+    state.merge_batch(b1, gaz, cfg)
+    full = run_pipeline(spark, b0.unionByName(b1), gaz, cfg)
+    assert _rows(state.canonical_triples(), CANON_COLS) \
+        == _rows(full.canonical_triples, CANON_COLS)

@@ -56,6 +56,7 @@ from tildener_spark.operators.document import (
 from tildener_spark.operators.graph import (
     SEP, _hub_node, canonicalize_triples_fused, corrections_from_cc,
     cross_doc_components, fused_canonical_tables, surface_vocab)
+from tildener_spark.plans.pipeline import prefilter_pages
 
 __all__ = ["read_stage", "rebuild_graph_stage",
            "run_pipeline_incremental", "url_set"]
@@ -142,18 +143,26 @@ def rebuild_graph_stage(spark: SparkSession, docs: DataFrame,
 
 def run_pipeline_incremental(
     spark: SparkSession,
-    prior: str | dict,
+    prior: str | dict | None,
     pages_delta: DataFrame,
     gazetteer: DataFrame,
     cfg: EngineConfig | None = None,
 ) -> dict:
     """Merge ``pages_delta`` into a prior fused run.
 
-    ``prior``: either a checkpoint dir from a prior
+    ``prior``: a checkpoint dir from a prior
     ``run_pipeline(checkpoint_dir=...)`` run (stages ``docs``/
-    ``triples_dc``/``mapping`` committed) or a dict with those three
-    DataFrames directly (the streaming epoch-state path,
-    streaming/kgstream.py).
+    ``triples_dc``/``hub_components`` committed), a dict with those
+    three DataFrames directly (the streaming epoch-state path,
+    streaming/kgstream.py), or ``None`` for an empty prior: the first
+    batch of a stream is a merge into typed empty tables, and its
+    result equals an in-memory ``run_pipeline`` over ``pages_delta``.
+
+    The crawl pre-filters of ``cfg`` (url_dedup, repetition_filter)
+    apply to ``pages_delta``, so url dedup acts within the delta.  The
+    delta's document pass emits the slim struct (no ``tokens``, no
+    ``mentions``): nothing a merge, its epoch commit or a rebuild
+    reads.
 
     Returns {"canonical_triples", "mapping", "hub_components",
     "entities", "triples_dc", "docs_delta", "triples_dc_delta",
@@ -165,25 +174,13 @@ def run_pipeline_incremental(
     cfg = cfg or EngineConfig()
     counters: dict[str, dict] = {}
 
-    # ---- prior state (stage tables; no recompute) ----------------
-    hub_prior = None
-    if isinstance(prior, str):
-        docs_prior = read_stage(spark, prior, "docs")
-        triples_dc_prior = read_stage(spark, prior, "triples_dc")
-        mapping_prior = read_stage(spark, prior, "mapping")
-        if os.path.isdir(os.path.join(prior, "hub_components")):
-            hub_prior = read_stage(spark, prior, "hub_components")
-    else:
-        docs_prior = prior["docs"]
-        triples_dc_prior = prior["triples_dc"]
-        mapping_prior = prior["mapping"]
-        hub_prior = prior.get("hub_components")
-
     # ---- delta corpus: the only corpus-sized work ----------------
     gaz_rows = [(r["ne_type"], r["surface"]) for r in gazetteer.collect()]
     initialisms = {s for t, s in gaz_rows if t == "ORG_INIT"}
-    doc_udf = make_process_document_udf(gaz_rows, cfg, initialisms)
-    docs_delta = pages_delta.select(
+    doc_udf = make_process_document_udf(
+        gaz_rows, cfg, initialisms, emit_tokens=False,
+        emit_mentions=False)
+    docs_delta = prefilter_pages(pages_delta, cfg).select(
         "url", "lang", doc_udf(F.col("text")).alias("doc")).persist()
     # one materializing pass (see run_pipeline), which also collects
     # the delta's url set below
@@ -193,6 +190,21 @@ def run_pipeline_incremental(
     resolved_delta = _resolved(docs_delta)
     hub_pairs_delta = explode_docs(docs_delta, "hub_pairs").select(
         "src", "dst")
+
+    # ---- prior state (stage tables; no recompute) ----------------
+    if prior is None:
+        docs_prior = docs_delta.limit(0)
+        triples_dc_prior = triples_dc_delta.limit(0)
+        hub_prior = spark.createDataFrame(
+            [], "node string, component string")
+    elif isinstance(prior, str):
+        docs_prior = read_stage(spark, prior, "docs")
+        triples_dc_prior = read_stage(spark, prior, "triples_dc")
+        hub_prior = read_stage(spark, prior, "hub_components")
+    else:
+        docs_prior = prior["docs"]
+        triples_dc_prior = prior["triples_dc"]
+        hub_prior = prior["hub_components"]
 
     # ---- url supersedence (re-crawl semantics) -------------------
     # A delta url already present in the prior state is a RE-CRAWL:
@@ -218,40 +230,20 @@ def run_pipeline_incremental(
 
     # prior partition as pre-collapsed star edges: every prior hub
     # points at its component representative (self-edges for
-    # singleton hubs are dropped; they add nothing to CC).  The
-    # vocabulary-sized hub_components stage (written by checkpointed
-    # runs since it was added) gives this directly; older state falls
-    # back to rejoining the mention-level tables — correct but
-    # corpus-sized (measured ~4x slower end-to-end at 200k docs).
-    if hub_prior is not None:
-        prior_hub_edges = (
-            hub_prior
-            .select(F.col("node").alias("src"),
-                    F.col("component").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-        )
-    else:
-        prior_hub_edges = (
-            resolved_prior
-            .join(mapping_prior, ["url", "ne_type", "surface"])
-            .select(
-                _hub_node(F.col("ne_type"), F.col("doc_canonical"))
-                .alias("src"),
+    # singleton hubs are dropped; they add nothing to CC)
+    prior_hub_edges = (
+        hub_prior
+        .select(F.col("node").alias("src"),
                 F.col("component").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-        )
+        .filter(F.col("src") != F.col("dst"))
+    )
 
     # ---- vocabulary delta + new-pair-only linking ----------------
-    if hub_prior is not None:
-        # the hub node-id set IS the prior doc-canonical vocabulary
-        # ("g:<type>␟<canonical>") — no docs scan needed
-        parts = F.split(F.substring("node", 3, 1 << 20), SEP)
-        v_prior = surface_vocab(hub_prior.select(
-            parts[0].alias("ne_type"), parts[1].alias("doc_canonical")), cfg)
-    else:
-        # a prior-docs scan that both the vocabulary and its delta
-        # read: cache it (vocabulary-sized)
-        v_prior = surface_vocab(resolved_prior, cfg).persist()
+    # the hub node-id set IS the prior doc-canonical vocabulary
+    # ("g:<type>␟<canonical>") — no docs scan needed
+    parts = F.split(F.substring("node", 3, 1 << 20), SEP)
+    v_prior = surface_vocab(hub_prior.select(
+        parts[0].alias("ne_type"), parts[1].alias("doc_canonical")), cfg)
     v_new = surface_vocab(resolved_delta, cfg).join(
         v_prior, ["ne_type", "surface"], "left_anti")
 
@@ -262,7 +254,6 @@ def run_pipeline_incremental(
         v_prior.unionByName(v_new),
         prior_hub_edges.unionByName(hub_pairs_delta),
         cfg, counters, new_vocab=v_new)
-    v_prior.unpersist()  # hub_cc is materialized
     corr = corrections_from_cc(hub_cc)
 
     resolved_all = resolved_prior.unionByName(resolved_delta)

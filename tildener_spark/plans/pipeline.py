@@ -78,6 +78,21 @@ _STAGE_INPUTS_UNFUSED = {"mentions": "tagged",
                          "canonical_triples": "triples"}
 
 
+def prefilter_pages(pages: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """The crawl-hygiene pre-filters of ``cfg`` (raw-crawl runs; off
+    for curated corpora).  Order matters: URL dedup first (cheap
+    canonical-key window) so the repetition arrays are never built
+    for pages the URL pass already drops; the repetition filter
+    itself is a per-row predicate, zero shuffle."""
+    if cfg.url_dedup:
+        from tildener_spark.operators.urls import keep_canonical_urls
+        pages = keep_canonical_urls(pages)
+    if cfg.repetition_filter:
+        from tildener_spark.operators.textstats import filter_repetitive
+        pages = filter_repetitive(pages)
+    return pages
+
+
 def run_pipeline(
     spark: SparkSession,
     pages: DataFrame,
@@ -107,19 +122,10 @@ def run_pipeline(
     if reextract_text:
         pages = pages.withColumn("text", extract_text("html"))
 
-    # crawl-hygiene pre-filters (raw-crawl runs; off for curated
-    # corpora).  Order matters: URL dedup first (cheap canonical-key
-    # window) so the repetition arrays are never built for pages the
-    # URL pass already drops; the repetition filter itself is a
-    # per-row predicate, zero shuffle.  With a checkpoint_dir the
-    # cleaned pages commit as their own resumable stage with
-    # rows_out counters like every other stage boundary.
-    if cfg.url_dedup:
-        from tildener_spark.operators.urls import keep_canonical_urls
-        pages = keep_canonical_urls(pages)
-    if cfg.repetition_filter:
-        from tildener_spark.operators.textstats import filter_repetitive
-        pages = filter_repetitive(pages)
+    # with a checkpoint_dir the cleaned pages commit as their own
+    # resumable stage with rows_out counters like every other stage
+    # boundary
+    pages = prefilter_pages(pages, cfg)
     if ckpt and (cfg.url_dedup or cfg.repetition_filter):
         pages = checkpoint_stage(spark, pages, ckpt, "pages_clean",
                                  counters=counters)

@@ -9,6 +9,7 @@ AQE coalesces from).
 from __future__ import annotations
 
 import os
+import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -19,7 +20,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
     mem = os.environ.get("SPARK_DRIVER_MEM", "8g")
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
@@ -58,14 +60,12 @@ def get_spark(
         # local[32]; no penalty at local[8]) — same reasoning as
         # setting spark.executor.memory floor on a real cluster
         .config("spark.driver.extraJavaOptions", f"-Xms{mem}")
-        # shuffle + spill to tmpfs when available: local-mode shuffle
-        # through a spinning/virtio disk serializes every stage
-        # boundary (on a real cluster this is the NVMe/ramdisk
-        # shuffle-dir choice)
+        # shuffle + spill on disk: a tmpfs local dir would take its
+        # bytes from the same RAM as the driver heap
         .config("spark.local.dir",
                 os.environ.get("SPARK_LOCAL_DIRS",
-                               "/dev/shm/spark-local"
-                               if os.path.isdir("/dev/shm") else "/tmp"))
+                               os.path.join(tempfile.gettempdir(),
+                                            "spark-local")))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

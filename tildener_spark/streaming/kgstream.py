@@ -12,22 +12,26 @@ epoch.  The canonical KG is therefore correct — bit-identical to a
 full-batch run over everything ingested so far — after EVERY batch,
 not only after a nightly compaction.
 
-State layout (``state_dir``)::
+State layout (``state_dir``), the same for every epoch — the first
+batch is a merge into an empty prior::
 
-    epoch_00000/          first batch: a full checkpoint layout
-                          (run_pipeline(checkpoint_dir=...))
-    epoch_00001/          each later batch: docs + triples_dc for the
-      docs/               batch's pages (append-only facts), mapping/
-      triples_dc/         hub_components/canonical_triples for the
-      mapping/            MERGED corpus (current view), _SUCCESS
-      hub_components/     marker written LAST so a crashed commit is
-      canonical_triples/  invisible
-      _SUCCESS
+    epoch_00000/
+      docs/               the batch's pages (url, lang, slim document
+                          struct: no tokens, no mentions)
+      triples_dc/         the batch's triples
+      mapping/            the MERGED corpus's current view
+      hub_components/
+      canonical_triples/
+      _BATCH_IDS          stream batch ids the epoch absorbed
+      _SUCCESS            marker written LAST, so a crashed commit is
+                          invisible
+    epoch_00001/ ...
 
-Readers take docs/triples_dc as the union of ALL committed epochs and
-mapping/hub_components/canonical_triples from the NEWEST — so the
-current canonical view is one directory read, while per-batch facts
-are never rewritten.  A crash mid-commit leaves no ``_SUCCESS``; the
+A merge reads docs/triples_dc (append-only facts) as the union of ALL
+committed epochs and hub_components (the prior component partition)
+from the NEWEST; the current canonical view is one directory read of
+the newest canonical_triples, while per-batch facts are never
+rewritten.  A crash mid-commit leaves no ``_SUCCESS``; the
 streaming checkpoint (offsets) replays the batch and the half-written
 epoch is overwritten — the same at-least-once + idempotent-commit
 contract as the batch pipeline's stage checkpoints.
@@ -54,7 +58,6 @@ from pyspark.sql.types import StructType
 from tildener_spark.config import EngineConfig
 from tildener_spark.plans.incremental import (
     read_stage, run_pipeline_incremental, url_set)
-from tildener_spark.plans.pipeline import run_pipeline
 
 __all__ = ["KGState", "kg_maintenance_query"]
 
@@ -137,7 +140,7 @@ class KGState:
         of every epoch's facts (a later batch re-crawling a url
         supersedes the earlier version — without this, a re-crawled
         page's stale docs/triples rows would re-enter every future
-        merge), current view from the newest epoch.  Epoch count is
+        merge), hub partition from the newest epoch.  Epoch count is
         bounded by compaction, so the chain of broadcast anti-joins
         stays shallow.
 
@@ -158,12 +161,8 @@ class KGState:
                 urls = F.broadcast(url_set(d))
                 docs = docs.join(urls, "url", "left_anti").unionByName(d)
                 tdc = tdc.join(urls, "url", "left_anti").unionByName(t)
-        prior = {"docs": docs, "triples_dc": tdc,
-                 "mapping": self._read(eps[-1], "mapping")}
-        if os.path.isdir(os.path.join(eps[-1], "hub_components")):
-            prior["hub_components"] = self._read(eps[-1],
-                                                 "hub_components")
-        return prior
+        return {"docs": docs, "triples_dc": tdc,
+                "hub_components": self._read(eps[-1], "hub_components")}
 
     def canonical_triples(self, epoch: int | None = None) -> DataFrame:
         """The canonical KG view — current by default, or TIME
@@ -185,9 +184,10 @@ class KGState:
     def merge_batch(self, pages: DataFrame, gazetteer: DataFrame,
                     cfg: EngineConfig | None = None,
                     batch_id: int | None = None) -> None:
-        """Commit one batch: full checkpointed run for the first
-        epoch, incremental merge + epoch commit afterwards.  Writes
-        the ``_SUCCESS`` marker last (commit atomicity).
+        """Commit one batch as a new epoch: an incremental merge into
+        the state :meth:`read` returns, or into an empty prior when no
+        epoch is committed yet, so every epoch has the same layout.
+        Writes the ``_SUCCESS`` marker last (commit atomicity).
 
         ``batch_id`` (the Structured Streaming micro-batch id) makes
         the commit idempotent under replay: a batch whose id is
@@ -201,21 +201,10 @@ class KGState:
         if batch_id is not None and batch_id in \
                 self.committed_batch_ids():
             return
+        prior = self.read() if self.epochs() else None
         path = self._next_path()
-        if not self.epochs():
-            import dataclasses
-            run_pipeline(self.spark, pages, gazetteer,
-                         dataclasses.replace(cfg,
-                                             checkpoint_dir=path))
-            # run_pipeline's stage tables carry their own markers;
-            # the epoch marker seals the whole layout
-            if batch_id is not None:
-                self._write_batch_ids(path, [batch_id])
-            with open(os.path.join(path, "_SUCCESS"), "w") as f:
-                f.write("")
-            return
-        res = run_pipeline_incremental(self.spark, self.read(),
-                                       pages, gazetteer, cfg)
+        res = run_pipeline_incremental(self.spark, prior, pages,
+                                       gazetteer, cfg)
         os.makedirs(path, exist_ok=True)
         self._write(res["docs_delta"], path, "docs")
         self._write(res["triples_dc_delta"], path, "triples_dc")
@@ -227,7 +216,6 @@ class KGState:
             self._write_batch_ids(path, [batch_id])
         with open(os.path.join(path, "_SUCCESS"), "w") as f:
             f.write("")
-
 
     def compact(self, rebuild: bool = False) -> None:
         """Rewrite the multi-epoch state as one epoch: per-url
@@ -272,8 +260,7 @@ class KGState:
         else:
             for view in ("mapping", "hub_components",
                          "canonical_triples"):
-                if os.path.isdir(os.path.join(newest, view)):
-                    self._write(self._read(newest, view), path, view)
+                self._write(self._read(newest, view), path, view)
         if batch_ids:
             self._write_batch_ids(path, batch_ids)
         with open(os.path.join(path, "_SUPERSEDES"), "w") as f:
